@@ -28,6 +28,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_warehouse_migration_spark.sources.readers import parquet_table
+
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
@@ -54,6 +56,8 @@ def query(name: str, oracle: str | None, headline: bool = False, tags: tuple[str
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table. Parquet → column pruning + predicate
     pushdown happen at the scan via Catalyst once the query narrows it.
+    Read through ``parquet_table``, so the schema-inference job runs once
+    per table and process, not once per query.
 
     ``events.ts`` is parquet ``timestamp[us]`` with no zone — Spark
     reads it as TIMESTAMP_NTZ, which matches DuckDB's naive TIMESTAMP
@@ -67,7 +71,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Harmless for timestamp[us] data; makes the bigint branch
         # reachable if nanos-shaped testdata ever returns.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = parquet_table(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts",

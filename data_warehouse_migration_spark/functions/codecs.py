@@ -21,8 +21,9 @@ ctypes (the same .so the brotli test suites already pin against; no
 Python *package* binding exists here, but the seam's job is exactly
 to show a native implementation slotting in, and a ctypes adapter
 over the system library is how a cluster without ``brotlicffi``
-would do it). zstd/lz4 have no in-container Python binding — their
-in-process ``native`` rows stay absent rather than faked — but their
+would do it). zstd/lz4 have an in-container decoder — pyarrow's
+``CompressedInputStream`` decodes zstd and LZ4 frames in process —
+but no in-process ``native`` row is registered for them yet; their
 reference CLIs are here, so each gets an out-of-process ``cli``
 implementation (fork-per-call, amortizing only at whole-archive
 granularity; the honest third tier between pure-Python and a real
@@ -312,7 +313,7 @@ def _cli_codec(fmt: str, cli: str) -> Codec:
     granularity (transport decode), never per-record. This is still a
     real production pattern — bulk re-compression and transport
     decode via the vendor CLI — and it completes measured slot-in
-    coverage for the two formats with no in-container Python binding.
+    coverage for the two formats with no registered ``native`` row.
     Cap contract: post-decode check (the CLI can't bound its output),
     same documented posture as the stdlib one-shot twins."""
     path = _find_cli(cli)

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +42,7 @@ from data_warehouse_migration_spark.operators.scd2 import (
     scd2_merge,
 )
 from data_warehouse_migration_spark.sources.medallion import MedallionLayout
+from data_warehouse_migration_spark.sources.readers import parquet_table
 from data_warehouse_migration_spark.sources.registry import SourceEntry, ingest_bronze
 from data_warehouse_migration_spark.sources.writers import (
     atomic_overwrite_parquet,
@@ -67,7 +69,7 @@ MONEY = DecimalType(18, 2)
 
 def silver_clean_f4211(spark: SparkSession, layout: MedallionLayout) -> DataFrame:
     """DF_Clean_JDE: decode + rename F4211 → Silver CleanSalesOrders."""
-    bronze = spark.read.parquet(layout.bronze("jde/F4211"))
+    bronze = parquet_table(spark, layout.bronze("jde/F4211"))
     order_date = julian_to_date("SDTRDJ")
     qty = implicit_decimal("SDUORG")
     amount = implicit_decimal("SDAEXP")
@@ -88,12 +90,12 @@ def silver_clean_f4211(spark: SparkSession, layout: MedallionLayout) -> DataFram
         unit_price.alias("UnitPrice"),
     )
     write_parquet(silver, layout.silver("CleanSalesOrders"))
-    return spark.read.parquet(layout.silver("CleanSalesOrders"))
+    return parquet_table(spark, layout.silver("CleanSalesOrders"))
 
 
 def silver_clean_f0101(spark: SparkSession, layout: MedallionLayout) -> DataFrame:
     """Customer snapshot: decoded business view of F0101."""
-    bronze = spark.read.parquet(layout.bronze("jde/F0101"))
+    bronze = parquet_table(spark, layout.bronze("jde/F0101"))
     silver = bronze.select(
         F.col("ABAN8").alias("CustomerID"),
         F.col("ABALPH").alias("CustomerName"),
@@ -102,13 +104,13 @@ def silver_clean_f0101(spark: SparkSession, layout: MedallionLayout) -> DataFram
         julian_to_date("ABUPMJ").alias("UpdatedDate"),
     )
     write_parquet(silver, layout.silver("CleanCustomers"))
-    return spark.read.parquet(layout.silver("CleanCustomers"))
+    return parquet_table(spark, layout.silver("CleanCustomers"))
 
 
 def gold_dim_date(spark: SparkSession, layout: MedallionLayout) -> DataFrame:
     dim = build_dim_date(spark)
     write_parquet(dim, layout.gold("Dim_Date"))
-    return spark.read.parquet(layout.gold("Dim_Date"))
+    return parquet_table(spark, layout.gold("Dim_Date"))
 
 
 def gold_dim_customer(
@@ -121,9 +123,9 @@ def gold_dim_customer(
     Incremental and idempotent-per-snapshot: re-running with an
     unchanged snapshot adds zero versions (hash-driven routing).
     """
-    snapshot = spark.read.parquet(layout.silver("CleanCustomers"))
+    snapshot = parquet_table(spark, layout.silver("CleanCustomers"))
     path = layout.gold("Dim_Customer")
-    existing = spark.read.parquet(path) if os.path.exists(path) else None
+    existing = parquet_table(spark, path) if os.path.exists(path) else None
     attrs = ["CustomerName", "SearchType", "CategoryCode"]
     merged = scd2_merge(
         existing,
@@ -140,7 +142,7 @@ def gold_dim_customer(
     )
     # The next state reads the current state → stage and swap atomically.
     atomic_overwrite_parquet(dim, path)
-    return spark.read.parquet(path)
+    return parquet_table(spark, path)
 
 
 def gold_fact_sales(
@@ -151,11 +153,11 @@ def gold_fact_sales(
     """Point-in-time fact load (DF_Load_FactSales + fact_sales.sql:11-13):
     each sale attributed to the customer version valid at order time;
     DateKey validated against Dim_Date by left-semi check."""
-    silver = spark.read.parquet(layout.silver("CleanSalesOrders"))
-    dim_c = spark.read.parquet(layout.gold("Dim_Customer")).select(
+    silver = parquet_table(spark, layout.silver("CleanSalesOrders"))
+    dim_c = parquet_table(spark, layout.gold("Dim_Customer")).select(
         "CustomerID", "CustomerKey", "ValidFrom", "ValidTo"
     )
-    dim_d = spark.read.parquet(layout.gold("Dim_Date")).select("DateKey")
+    dim_d = parquet_table(spark, layout.gold("Dim_Date")).select("DateKey")
 
     # PIT on the *date* axis (reference wraps ValidFrom/To in toDate,
     # DF_Load_FactSales.json:119) — compare dates, not timestamps.
@@ -181,22 +183,28 @@ def gold_fact_sales(
     )
     fact = assign_surrogate_keys(fact, "SalesKey", order_by=["OrderNumber"])
     write_parquet(fact, layout.gold("Fact_Sales"))
-    return spark.read.parquet(layout.gold("Fact_Sales"))
+    return parquet_table(spark, layout.gold("Fact_Sales"))
 
 
 def verification(spark: SparkSession, layout: MedallionLayout) -> dict:
     """The reference's warehouse checks (load_gold_data.sql:101-128):
-    per-table counts + top-10 star join by ExtendedAmount."""
-    counts = {
-        name: spark.read.parquet(layout.gold(name)).count()
-        for name in ["Dim_Date", "Dim_Customer", "Fact_Sales"]
-    }
-    fact = spark.read.parquet(layout.gold("Fact_Sales"))
-    dim_c = spark.read.parquet(layout.gold("Dim_Customer"))
-    dim_d = spark.read.parquet(layout.gold("Dim_Date"))
+    per-table counts + top-10 star join by ExtendedAmount. The gold
+    tables are re-read from disk, and the three counts come from one
+    tagged union pass instead of one count job each."""
+    names = ["Dim_Date", "Dim_Customer", "Fact_Sales"]
+    tables = {name: parquet_table(spark, layout.gold(name)) for name in names}
+    tagged = reduce(
+        DataFrame.unionByName,
+        [tables[name].select(F.lit(name).alias("table")) for name in names],
+    )
+    counts = dict.fromkeys(names, 0)
+    counts.update(
+        (r["table"], r["count"]) for r in tagged.groupBy("table").count().collect()
+    )
     top = (
-        fact.join(F.broadcast(dim_c), "CustomerKey")
-        .join(F.broadcast(dim_d), "DateKey")
+        tables["Fact_Sales"]
+        .join(F.broadcast(tables["Dim_Customer"]), "CustomerKey")
+        .join(F.broadcast(tables["Dim_Date"]), "DateKey")
         .select("OrderNumber", "CustomerName", "FullDate", "ExtendedAmount")
         .orderBy(F.col("ExtendedAmount").desc(), "OrderNumber")
         .limit(10)

@@ -9,9 +9,91 @@ column pruning effective (the select reaches the scan).
 
 from __future__ import annotations
 
+import json
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+#: Footer key under which Spark's parquet writer stores the row schema;
+#: Spark's own schema inference prefers it over the parquet schema.
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: With this conf on, Spark merges every footer, so no single footer
+#: stands for the table.
+MERGE_SCHEMA = "spark.sql.parquet.mergeSchema"
+
+#: Session confs that change what Spark infers from a parquet file
+#: without Spark row metadata (part of the inferred-schema cache key).
+INFERENCE_CONFS = (
+    MERGE_SCHEMA,
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+# real path -> ((data file stamps, inference confs), inferred schema).
+# Two threads missing at once both infer and store equal entries.
+_INFERRED: dict[str, tuple[tuple, StructType]] = {}
+
+
+def parquet_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    A bare ``spark.read.parquet`` runs one Spark job to read a footer
+    (``mergeSchemasInParallel``) before any query is planned. The same
+    schema is available on the driver:
+
+    - files written by Spark carry it in the footer's Spark row
+      metadata, which is exactly what Spark's inference returns; it is
+      read here with pyarrow and handed to ``spark.read.schema``.
+      Spark still discovers and appends Hive partition columns itself.
+    - other parquet (e.g. pyarrow-written tables) pays Spark's inference
+      once; the result is kept per real path, valid while the data
+      files' (name, size, mtime) and :data:`INFERENCE_CONFS` are
+      unchanged, so a rewritten or re-pointed table is re-inferred.
+    """
+    files = _data_files(path)
+    if not files:  # missing, empty or non-local: Spark decides
+        return spark.read.parquet(path)
+    meta = pq.read_metadata(files[0]).metadata or {}
+    merge = str(spark.conf.get(MERGE_SCHEMA, None)).lower() == "true"
+    if SPARK_ROW_METADATA in meta and not merge:
+        schema = StructType.fromJson(json.loads(meta[SPARK_ROW_METADATA]))
+        return spark.read.schema(schema).parquet(path)
+    real = os.path.realpath(path)
+    stamp = (
+        tuple((f, s.st_size, s.st_mtime_ns) for f in files for s in [os.stat(f)]),
+        tuple(spark.conf.get(k, None) for k in INFERENCE_CONFS),
+    )
+    hit = _INFERRED.get(real)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _INFERRED[real] = (stamp, df.schema)
+    return df
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet data files under a local ``path`` in sorted order,
+    skipping hidden (``_``/``.``-prefixed) entries as Spark's listing
+    does; a file path is its own only data file."""
+    real = os.path.realpath(path)
+    if os.path.isfile(real):
+        return [real]
+    found = []
+    for root, dirs, names in os.walk(real, followlinks=True):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        found.extend(
+            os.path.join(root, n)
+            for n in sorted(names)
+            if not n.startswith(("_", "."))
+        )
+    return found
 
 
 def read_csv(
@@ -48,7 +130,7 @@ def read_parquet(
     declared columns (drift = extra columns tolerated, missing column =
     NULL of declared type — matching ADF's drift posture rather than
     failing the read)."""
-    df = spark.read.parquet(path)
+    df = parquet_table(spark, path)
     if declared is None:
         return df
     cols = []

@@ -15,7 +15,7 @@ import json
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -63,14 +63,19 @@ def ingest_bronze(
 
     def copy(entry: SourceEntry) -> tuple[str, int]:
         df = read_csv(spark, layout.landing(entry.source_file), schema=entry.schema)
-        out = df.withColumn("ingest_date", F.lit(run_date))
+        # Rows are counted as the write passes them, not by a second
+        # scan of the CSV.
+        rows = Observation()
+        out = df.withColumn("ingest_date", F.lit(run_date)).observe(
+            rows, F.count(F.lit(1)).alias("n")
+        )
         write_parquet(
             out,
             layout.bronze(entry.sink_path),
             mode="overwrite",
             partition_by=["ingest_date"],
         )
-        return entry.sink_path, df.count()
+        return entry.sink_path, rows.get["n"]
 
     if max_parallel > 1 and len(entries) > 1:
         with ThreadPoolExecutor(max_workers=max_parallel) as pool:

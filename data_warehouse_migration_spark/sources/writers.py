@@ -16,6 +16,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_warehouse_migration_spark.sources.readers import parquet_table
+
 
 def write_parquet(
     df: DataFrame,
@@ -149,7 +151,7 @@ def checkpoint_roundtrip(spark: SparkSession, df: DataFrame, path: str) -> DataF
     ``path`` into ``path`` would corrupt it, so the merge pipeline
     stages through :func:`atomic_overwrite_parquet` and re-reads."""
     atomic_overwrite_parquet(df, path)
-    return spark.read.parquet(path)
+    return parquet_table(spark, path)
 
 
 def write_bucketed(
@@ -300,7 +302,7 @@ def stage_to_parquet(df: DataFrame, name: str, scope: str | None = None) -> Data
     # Record only AFTER the write succeeds: a failed stage must not
     # poison the key and block a corrected retry under the same name.
     _STAGED_KEYS[key] = fingerprint
-    return df.sparkSession.read.parquet(path)
+    return parquet_table(df.sparkSession, path)
 
 
 _STAGED_KEYS: dict[str, int] = {}

@@ -1,10 +1,9 @@
 """Hashed linear classifier inference (functions/text):
-feature-stream shape, integer-exact scoring, verdict-on-integer
-contract, and the zero-shuffle plan promise."""
+feature-stream shape, integer-exact scoring and the verdict-on-integer
+contract. The query's plan contract (no keyed exchange, the round-robin
+widen allowed) is pinned by ``WIDEN_ONLY`` in test_plan_guards.py."""
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import functions as F
 
@@ -79,16 +78,6 @@ def test_keep_verdict_rides_on_integer_score(spark):
         | ((F.col("prob") >= 0.5) != (F.col("keep") == 1))
     ).count()
     assert bad == 0
-
-
-def test_classifier_plan_is_zero_shuffle(spark):
-    from data_warehouse_migration_spark.catalog import REGISTRY
-
-    df = REGISTRY["quality_classifier_scores"].spark_fn(
-        spark, "/root/testdata/sf0.001"
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"Exchange", plan)) == 0
 
 
 # --- Hypothesis properties -------------------------------------------------

@@ -2,16 +2,28 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
+from decimal import Decimal
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from data_warehouse_migration_spark.sources.readers import read_csv, read_parquet
+from data_warehouse_migration_spark.sources.readers import (
+    parquet_table,
+    read_csv,
+    read_parquet,
+)
 from data_warehouse_migration_spark.sources.registry import load_source_config
-from data_warehouse_migration_spark.sources.writers import atomic_overwrite_parquet
+from data_warehouse_migration_spark.sources.writers import (
+    atomic_overwrite_parquet,
+    write_parquet,
+)
 
 
 def test_read_parquet_declared_schema_drift(spark, tmp_path):
@@ -230,3 +242,114 @@ def test_stage_root_sweep_removes_only_dead_pid_dirs(tmp_path):
     assert (base / f"pid{os.getpid()}").exists()
     assert (base / "pid1").exists()
     assert (base / "not_a_pid_dir").exists()
+
+
+# --- parquet_table: spark.read.parquet without the schema-inference job ---
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _write_hive(spark, path):
+    write_parquet(
+        spark.createDataFrame([(1, "a")], "id int, s string").withColumn(
+            "ingest_date", F.lit("2024-01-02")
+        ),
+        path,
+        partition_by=["ingest_date"],
+    )
+
+
+def _write_symlinked(spark, path):
+    atomic_overwrite_parquet(spark.range(3), path)
+    atomic_overwrite_parquet(spark.range(3).withColumn("x", F.lit("v")), path)
+
+
+def _write_arrow_ntz(spark, path):
+    pq.write_table(
+        pa.table({"ts": pa.array([dt.datetime(2024, 1, 1, 12)], pa.timestamp("us"))}),
+        path,
+    )
+
+
+def _write_decimal(spark, path):
+    spark.createDataFrame(
+        [(Decimal("12.34"),)], "m decimal(18,2)"
+    ).write.parquet(path)
+
+
+@pytest.mark.parametrize(
+    "write, expect",
+    [
+        (_write_hive, ("ingest_date", "date")),
+        (_write_symlinked, ("x", "string")),
+        (_write_arrow_ntz, ("ts", "timestamp_ntz")),
+        (_write_decimal, ("m", "decimal(18,2)")),
+    ],
+    ids=["hive_partitioned", "atomic_symlink", "arrow_timestamp_ntz", "decimal"],
+)
+def test_parquet_table_schema_matches_spark_inference(spark, tmp_path, write, expect):
+    path = str(tmp_path / "t")
+    write(spark, path)
+    got = parquet_table(spark, path)
+    assert got.schema == spark.read.parquet(path).schema
+    assert expect in got.dtypes
+    assert got.collect() == spark.read.parquet(path).collect()
+
+
+@pytest.mark.parametrize("writer", ["spark", "pyarrow"])
+def test_parquet_table_rewrite_returns_new_schema(spark, tmp_path, writer):
+    path = str(tmp_path / "t.parquet")
+    for columns in ({"a": [1]}, {"b": ["x"], "c": [2.5]}):
+        if writer == "spark":
+            spark.createDataFrame(pd.DataFrame(columns)).write.mode(
+                "overwrite"
+            ).parquet(path)
+        else:
+            pq.write_table(pa.table(columns), path)
+        parquet_table(spark, path)  # warm the schema cache
+        assert parquet_table(spark, path).columns == list(columns)
+        assert parquet_table(spark, path).schema == spark.read.parquet(path).schema
+
+
+def test_parquet_table_cache_tracks_inference_confs(spark, tmp_path):
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    assert parquet_table(spark, path).dtypes == [("b", "binary")]
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert parquet_table(spark, path).dtypes == [("b", "string")]
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert parquet_table(spark, path).dtypes == [("b", "binary")]
+
+
+def test_parquet_table_merges_footers_under_merge_schema(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1,)], "a int").write.parquet(path)
+    spark.createDataFrame([(2,)], "b int").write.mode("append").parquet(path)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        merged = spark.read.parquet(path).schema
+        assert sorted(merged.fieldNames()) == ["a", "b"]
+        assert parquet_table(spark, path).schema == merged
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_parquet_table_warm_read_launches_no_job(spark, tmp_path):
+    spark_path = str(tmp_path / "spark")
+    _write_hive(spark, spark_path)
+    arrow_path = str(tmp_path / "arrow.parquet")
+    _write_arrow_ntz(spark, arrow_path)
+
+    before = _next_job_id(spark)
+    spark.read.parquet(spark_path).schema
+    assert _next_job_id(spark) - before == 1  # what the seam avoids
+
+    parquet_table(spark, arrow_path)  # inferred once by Spark
+    before = _next_job_id(spark)
+    parquet_table(spark, spark_path).schema  # Spark row metadata: never a job
+    parquet_table(spark, arrow_path).schema  # cached inference
+    assert _next_job_id(spark) - before == 0

@@ -117,6 +117,49 @@ def test_scd2_second_run_and_pit_attribution(spark, warehouse):
         assert fact2.filter(F.col("CustomerKey") == new_key).count() == 0
 
 
+def test_initial_load_job_count_is_pinned(spark, tmp_path):
+    """One initial load launches exactly 16 Spark jobs: bronze 2 (one
+    write per source, rows counted by an Observation on the write),
+    the silver and Dim_Date writes 1 each, Dim_Customer 2, Fact_Sales
+    4, verification 5 (one tagged count pass + the top-10 star join).
+    Every parquet read goes through ``parquet_table`` and launches no
+    job, so a bare ``spark.read.parquet`` or a ``count()`` brought back
+    into the chain breaks this pin."""
+    root = str(tmp_path)
+    generate_landing(root, n_customers=20, n_orders=60, seed=7)
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    before = jobs.nextJobId()
+    W.run_warehouse(spark, root, now=T1, run_date="2024-01-01")
+    assert jobs.nextJobId() - before == 16
+
+
+def test_ingest_bronze_counts_landing_rows(spark, tmp_path):
+    """The Copy activity's row counts equal the landing CSVs' data rows,
+    a malformed row included (PERMISSIVE keeps it with NULL cells)."""
+    import csv
+
+    from data_warehouse_migration_spark.sources.registry import ingest_bronze
+
+    root = str(tmp_path)
+    generate_landing(root, n_customers=20, n_orders=60, seed=7)
+    layout = MedallionLayout(root)
+    with open(layout.landing("F0101.csv"), "a") as fh:
+        fh.write("notanint,Broken Co,C,100,123001\n")
+    counts = ingest_bronze(spark, layout, W.SOURCES, "2024-01-01")
+
+    def data_rows(name):
+        with open(layout.landing(name), newline="") as fh:
+            return sum(1 for _ in csv.DictReader(fh))
+
+    assert counts == {
+        "jde/F0101": data_rows("F0101.csv"),
+        "jde/F4211": data_rows("F4211.csv"),
+    }
+    assert counts["jde/F0101"] == 21
+    bronze = spark.read.parquet(layout.bronze("jde/F0101"))
+    assert bronze.filter(F.col("ABAN8").isNull()).count() == 1
+
+
 def test_orchestrator_retry_and_failure_hook():
     calls = {"n": 0}
 
